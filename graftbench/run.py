@@ -24,15 +24,6 @@ import build  # noqa: E402
 WORKLOADS = ("ann_bulk", "ann_online", "text_curation")
 TIMEOUT_S = 170
 
-# Spark 4 on JDK 17 outside spark-submit needs these opens.
-ADD_OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
-    "java.base/java.io", "java.base/java.net", "java.base/java.nio", "java.base/java.util",
-    "java.base/java.util.concurrent", "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
-    "java.base/sun.util.calendar",
-]
-
 
 def main():
     p = argparse.ArgumentParser()
@@ -50,18 +41,10 @@ def main():
     work = os.path.join(root, ".bench_build", "work", "%s-%d" % (a.workload, os.getpid()))
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
-    # A fixed heap and the parallel collector: under G1 the pass times of
-    # the driver-bound ann_online varied by a quarter from JVM to JVM.
-    # No perf-data file: the JVM would write it under /tmp, outside the checkout.
-    cmd = ["java", "-XX:-UsePerfData", "-Xms3g", "-Xmx3g", "-XX:+UseParallelGC", "-Xss8m",
-           "-Djava.io.tmpdir=" + os.path.join(work, "tmp"),
-           "-Dspark.ui.enabled=false"]
-    for o in ADD_OPENS:
-        cmd += ["--add-opens", o + "=ALL-UNNAMED"]
-    cmd += ["-cp", build.classpath(root), "graftbench.Main",
-            "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
-            "--trace", a.trace, "--work", work,
-            "--out", os.path.join(root, ".bench_build", "results")]
+    cmd = build.java(root, work, "graftbench.Main") + [
+        "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
+        "--trace", a.trace, "--work", work,
+        "--out", os.path.join(root, ".bench_build", "results")]
     if a.tiny:
         cmd.append("--tiny")
     proc = subprocess.Popen(cmd, cwd=work)

@@ -100,6 +100,9 @@ final class AnnBulk extends Workload {
     base = Gen.vectors(mix, ctx.seed, size.n, 0.02)
     probes = Gen.probes(mix, ctx.seed, size.waves * size.perWave)
     Gen.writeFvecs(ctx.path("base.fvecs"), base.vectors)
+    // read back, as the timed path will
+    val rows = VectorSources.readFvecs(ctx.spark, ctx.path("base.fvecs")).count()
+    require(rows == size.n, s"base.fvecs holds $rows vectors, not ${size.n}")
   }
 
   def afterSetup(ctx: Ctx): Unit = {
@@ -149,8 +152,10 @@ final class AnnBulk extends Workload {
     }
     wave("hnsw.cold_wave", "hnsw", "cosine", 0)(loaded.knnJoin(_, K))
     (1 until size.waves).foreach(w => wave("hnsw.wave", "hnsw", "cosine", w)(loaded.knnJoin(_, K)))
-    wave("ivf_flat.wave", "ivf_flat", "cosine", 0)(IvfFlat.knnJoin(flat, _, K, nprobe = 4))
-    wave("ivf_pq.wave", "ivf_pq", "euclidean", 1)(IvfPq.knnJoin(pq, vecs, _, K, nprobe = 4, rerank = 50))
+    (0 until size.waves).foreach { w =>
+      wave("ivf_flat.wave", "ivf_flat", "cosine", w)(IvfFlat.knnJoin(flat, _, K, nprobe = 4))
+      wave("ivf_pq.wave", "ivf_pq", "euclidean", w)(IvfPq.knnJoin(pq, vecs, _, K, nprobe = 4, rerank = 50))
+    }
     // exact scoring is O(base × probes): one wave is enough to time it
     wave("exact.wave", "exact", "cosine", 0)(KnnJoin.exactKnnJoin(vecs, _, K))
     // the similarity kernel alone: every base × probe cosine, no top-k

@@ -50,8 +50,10 @@ final class AnnOnline extends Workload {
   private var updatesSent = 0L
   private var rowsSent = 0L
 
-  /** Set-up fits every index, so it runs fewer times. */
-  override def setups: Int = 3
+  /** A pass is one rotation: short, so a run times several after the JIT
+    * has seen a few. */
+  override def warmups: Int = 4
+  override def tracePasses: Int = 3
 
   private def params(ctx: Ctx) = HnswParams(m = 16, efConstruction = 100,
     numPartitions = ctx.threads, seed = 7L)
@@ -68,7 +70,7 @@ final class AnnOnline extends Workload {
   def setup(ctx: Ctx): Unit = {
     release()
     size = if (ctx.tiny) Size(500, 16, 4, 1, 2, 1, 4, 4, 4)
-      else Size(1500, 32, 16, 3, 4, 2, 12, 12, 16)
+      else Size(1000, 32, 16, 1, 4, 2, 6, 6, 16)
     val t = ctx.tracer
     val spark = ctx.spark
     mix = Gen.mixture(ctx.seed, size.dim, size.centers)
@@ -127,15 +129,18 @@ final class AnnOnline extends Workload {
       .toString.contains("Filter (rank")
   }
 
-  /** Pass `p`: every rotation sends the same waves, then an upsert batch of
-    * ids new to this pass plus re-embedded base ids, drawn from (seed, p). */
+  /** Pass `p`: every rotation sends the same waves, and after each half of
+    * them an upsert batch of ids new to this pass plus re-embedded base
+    * ids, drawn from (seed, p). */
   private def plan(ctx: Ctx, p: Int): Seq[Step] = (0 until size.rotations).flatMap { rot =>
-    val b = p * size.rotations + rot
-    val r = new java.util.SplittableRandom(ctx.seed * 7919 + b)
-    val fresh = Array.tabulate(size.newPerBatch)(j => size.n.toLong + b.toLong * size.newPerBatch + j)
-    val olds = r.ints(0, size.n).distinct().limit(size.updPerBatch).toArray.map(_.toLong)
-    val ids = fresh ++ olds
-    rotation :+ Upsert(ids, Gen.probes(mix, ctx.seed * 7 + b, ids.length), olds.length)
+    rotation.grouped(rotation.length / 2).zipWithIndex.flatMap { case (waves, half) =>
+      val b = (p * size.rotations + rot) * 2 + half
+      val r = new java.util.SplittableRandom(ctx.seed * 7919 + b)
+      val fresh = Array.tabulate(size.newPerBatch)(j => size.n.toLong + b.toLong * size.newPerBatch + j)
+      val olds = r.ints(0, size.n).distinct().limit(size.updPerBatch).toArray.map(_.toLong)
+      val ids = fresh ++ olds
+      waves :+ Upsert(ids, Gen.probes(mix, ctx.seed * 7 + b, ids.length), olds.length)
+    }
   }
 
   def prepare(ctx: Ctx, pass: Int): Unit = answers.clear()
@@ -212,8 +217,7 @@ final class AnnOnline extends Workload {
       "wave_p50_ms" -> Metrics.median(waveS) * 1e3,
       "wave_p95_ms" -> Metrics.percentile(waveS, 95) * 1e3,
       "recall_at_10" -> recall.micro(kinds),
-      "ingest_rows_per_s" -> rowsPerUpsert * t.secs("stream.upsert").length * 2 /
-        (t.secs("stream_hnsw.upsert") ++ t.secs("stream_ivf.upsert")).sum,
+      "ingest_rows_per_s" -> rowsPerUpsert / Metrics.median(t.secs("stream.upsert")),
       "index_mb" -> indexBytes / 1e6)
   }
 

@@ -31,13 +31,15 @@ final class Checks {
   def require(ok: Boolean, what: => String): Unit = call(what, if (ok) Nil else Seq("violated"))
 }
 
-/** One workload. `setup` runs several times and is timed as `setup_s`;
-  * `afterSetup` (oracle) and `prepare` are untimed; `pass` is a fixed
-  * amount of work. Pass 0 is an untimed warm-up; every pass is checked by
-  * `check` after its timer stops. */
+/** One workload. `setup` runs once untimed, to warm the JVM, then several
+  * times timed as `setup_s`; `afterSetup` (oracle) and `prepare` are
+  * untimed; `pass` is a fixed amount of work. The first `warmups` passes
+  * are untimed; every pass is checked by `check` after its timer stops. */
 trait Workload {
-  /** Set-ups per untraced run; `setup_s` is their median. */
-  def setups: Int = 5
+  /** Untimed passes before the timed ones. */
+  def warmups: Int = 1
+  /** Untraced and traced passes of a traced run. */
+  def tracePasses: Int = 1
   def setup(ctx: Ctx): Unit
   def afterSetup(ctx: Ctx): Unit
   def prepare(ctx: Ctx, pass: Int): Unit
@@ -90,6 +92,9 @@ object Main {
     ms
   }
 
+  /** Timed set-ups per untraced run; `setup_s` is their median. */
+  val Setups = 3
+
   /** Passes (counting the warm-up) whose answers make the recall figures,
     * so they repeat exactly for a seed whatever the pass count. */
   val RecallPasses = 2
@@ -110,6 +115,7 @@ object Main {
     def mark(what: String): Unit = clock += ((what, System.currentTimeMillis()))
     val load0 = loadAvg()
     val sentinel0 = sentinelMs()
+    mark("sentinel")
     val spark = SparkSession.builder()
       .master(s"local[$nproc]")
       .withExtensions(new graft.GraftExtensions)
@@ -136,7 +142,12 @@ object Main {
     var overheadS = 0.0
     var error: Option[Throwable] = None
     try {
-      (0 until (if (trace) 1 else w.setups)).foreach { _ =>
+      // set-up 0 loads classes and compiles code for the timed ones
+      tracer.recording = false
+      w.setup(ctx)
+      tracer.recording = true
+      mark("warmup_setup")
+      (0 until (if (trace) 1 else Setups)).foreach { _ =>
         tracer.enabled = trace
         val t0 = System.nanoTime()
         w.setup(ctx)
@@ -146,36 +157,36 @@ object Main {
       }
       w.afterSetup(ctx)
       mark("after_setup")
-      def onePass(i: Int, traced: Boolean): Double = {
+      var i = 0
+      def onePass(traced: Boolean): Double = {
+        val timed = i >= w.warmups
         w.prepare(ctx, i)
         tracer.enabled = traced
-        tracer.recording = i > 0
+        tracer.recording = timed
         val c0 = processCpuS()
         val t0 = System.nanoTime()
         try tracer.span("pass")(w.pass(ctx, i))
         finally { tracer.enabled = false; tracer.recording = true }
         val dt = (System.nanoTime() - t0) / 1e9
-        if (i > 0) { passS += dt; passCpu += processCpuS() - c0 }
-        mark(if (i > 0) "pass" else "warmup")
+        if (timed) { passS += dt; passCpu += processCpuS() - c0 }
+        mark(if (timed) "pass" else "warmup")
         w.check(ctx, i, checks)
         mark("check")
+        i += 1
         dt
       }
-      // pass 0 warms the JVM: class loading, codegen and JIT
-      onePass(0, traced = false)
+      // the warm-up passes finish class loading, codegen and JIT
+      while (i < w.warmups) onePass(traced = false)
       if (trace) {
-        // an untraced and a traced pass of the same work differ by the
+        // untraced and traced passes of the same work differ by the
         // tracing overhead
-        val plain = onePass(1, traced = false)
-        overheadS = onePass(2, traced = true) - plain
+        val plain = (1 to w.tracePasses).map(_ => onePass(traced = false)).sum
+        overheadS = (1 to w.tracePasses).map(_ => onePass(traced = true)).sum - plain
       } else {
         val t0 = System.nanoTime()
-        var i = 1
         var last = 0.0
-        while (i == 1 || (System.nanoTime() - t0) / 1e9 + last <= seconds) {
-          last = onePass(i, traced = false)
-          i += 1
-        }
+        while (i == w.warmups || (System.nanoTime() - t0) / 1e9 + last <= seconds)
+          last = onePass(traced = false)
       }
     } catch { case e: Throwable => error = Some(e) }
 
@@ -245,7 +256,7 @@ object Main {
     val report1 = s"""{"workload": "$name", "seed": $seed, "trace": ${if (trace) 1 else 0}, """ +
       s""""correct": $correct, "attempted": ${checks.attempted}, "failed": ${checks.failed}, """ +
       s""""passes": ${passS.length}, "pass_s": ${passS.map(fmt).mkString("[", ", ", "]")}, "telemetry": ${telemetry.map { case (k, v) => s""""$k": ${fmt(v)}""" }.mkString("{", ", ", "}")}, """ +
-      s""""report": ${metricsJson(report)}, "metrics": ${metricsJson(if (trace) layer else e2e)}}"""
+      s""""report": ${metricsJson(report)}, "calls": ${callsJson(tracer)}, "metrics": ${metricsJson(if (trace) layer else e2e)}}"""
     val outFile = new java.io.File(outDir, s"$name-seed$seed-trace${if (trace) 1 else 0}")
     outFile.getParentFile.mkdirs()
     java.nio.file.Files.writeString(new java.io.File(outFile.getPath + ".json").toPath, report1)
@@ -260,6 +271,10 @@ object Main {
     System.out.flush()
     sys.exit(if (correct) 0 else 1)
   }
+
+  /** Seconds of every recorded call, by span name, in call order. */
+  private def callsJson(t: Tracer): String = t.durations.map { case (n, ds) =>
+    s""""$n": ${ds.map(d => f"$d%.4f").mkString("[", ", ", "]")}""" }.mkString("{", ", ", "}")
 
   /** Every digit the double has; non-finite values become -1. */
   def fmt(v: Double): String = if (v.isNaN || v.isInfinite) "-1" else v.toString

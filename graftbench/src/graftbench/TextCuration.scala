@@ -13,8 +13,6 @@ import graft.operators.{Bpe, Dedup, MlLsh, NgramDup, SequenceExport, TextIndex}
   * Only the text operators work here; the vector layers do nothing. */
 final class TextCuration extends Workload {
 
-  override def setups: Int = 3
-
   private case class Size(n: Int, vocab: Int, waves: Int, perWave: Int, merges: Int, seqLen: Int)
   private val K = 10
   private val MaxJaccardDist = 0.5
@@ -41,7 +39,7 @@ final class TextCuration extends Workload {
   private var bmWant = 0L
 
   def setup(ctx: Ctx): Unit = {
-    size = if (ctx.tiny) Size(300, 800, 3, 4, 30, 64) else Size(600, 3000, 6, 8, 60, 256)
+    size = if (ctx.tiny) Size(300, 800, 3, 4, 30, 64) else Size(450, 3000, 4, 8, 40, 256)
     corpus = Gen.corpus(ctx.seed, size.n, size.vocab, dupFrac = 0.06, boilerFrac = 0.2)
     write(ctx, corpus.docs, ctx.path("docs.parquet"))
   }
@@ -97,8 +95,13 @@ final class TextCuration extends Workload {
     t.span("export.write")(SequenceExport.write(packed, ctx.path(s"export-$p"), rowsPerShard = 200))
   }
 
-  private def shingles(doc: String): Set[String] =
-    doc.trim.split("\\s+").sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+  /** The word 3-shingles of a document as `minHashNearDups` sees them:
+    * hashed into its default 2^18 features. The distance it reports is the
+    * exact Jaccard distance of these feature sets, so two shingles that
+    * share a feature count once. */
+  private def shingles(doc: String): Set[Int] =
+    doc.trim.split("\\s+").sliding(3).filter(_.length == 3)
+      .map(w => math.floorMod(w.mkString(" ").hashCode, 1 << 18)).toSet
 
   def check(ctx: Ctx, pass: Int, checks: Checks): Unit = {
     val spark = ctx.spark
